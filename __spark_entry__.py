@@ -125,15 +125,10 @@ def q_pip_convex(spark, sf_dir):
 
     p = _points(spark, sf_dir)
     region = [{"region_id": 1, "rings": [np.asarray(_HEX, dtype=np.float64)]}]
-    out = SJ.pip_join(
-        spark, p, region, keep_cols=["id"], coarse_prefilter=True,
-        # 6-edge convex hexagon: refine='auto' picks the pure-Column
-        # even-odd test (<= max_column_edges), dropping the ArrowEvalPython
-        # stage entirely — measured 3.6s -> 1.0s cold, identical rows (r6;
-        # 'udf' stays the default for real multi-region covers where the
-        # unrolled expression leaves codegen)
-        refine="auto",
-    )
+    # 6-edge convex hexagon: every boundary cell needs <= 6 edge slots, so
+    # the exact refine runs in the join condition, with no ArrowEvalPython
+    # stage (tests/test_plan_lint.py caps this query at 0 Python stages)
+    out = SJ.pip_join(spark, p, region, keep_cols=["id"], coarse_prefilter=True)
     return out.select("id").transform(_psort, "id")
 
 
@@ -745,6 +740,9 @@ def q_pip_fixture_regions(spark, sf_dir):
     pts = spark.createDataFrame(
         pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
     )
+    # the densest boundary cell of the 12 fixture regions needs 7 edges
+    # (<= SJ.MAX_EDGE_SLOTS): the exact refine runs in the join condition,
+    # with no Python stage
     out = SJ.pip_join(
         spark, pts, FX.gen_admin_polygons(12), keep_cols=["image_id"],
         coarse_prefilter=True,
@@ -1016,6 +1014,8 @@ def entry(spark: SparkSession) -> DataFrame:
         pd.DataFrame({"image_id": [f"img{i:012d}" for i in range(n)], "lon": lon, "lat": lat})
     )
     pts, h3_names = C.with_cell_columns(pts, "lon", "lat", [7, 8, 9, 10, 11])
+    # both joins refine in the JVM (at most 7 and 6 edges per boundary cell,
+    # <= SJ.MAX_EDGE_SLOTS), so the flagship plan has no Python stage
     joined = SJ.pip_join(
         spark, pts, FX.gen_admin_polygons(12),
         keep_cols=["image_id", "lon", "lat"],
@@ -1027,7 +1027,6 @@ def entry(spark: SparkSession) -> DataFrame:
         hex_pts.select(F.col("id").cast("string").alias("image_id"), "lon", "lat"),
         [{"region_id": 1000, "rings": [np.asarray(_HEX, dtype=np.float64)]}],
         keep_cols=["image_id", "lon", "lat"],
-        refine="auto",  # 6 edges: pure-Column refine, no Arrow stage (r6)
     )
     both = joined.unionByName(hex_joined)
     x, y = G.tile_expr(F.col("lon"), F.col("lat"), 12)

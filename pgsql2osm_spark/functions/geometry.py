@@ -17,6 +17,8 @@ from-scratch implementations:
   the exact PIP refine entirely — the engine's version of the reference's
   "AND of ST_Intersects beats ST_Intersection, cost 1000x lower" staging
   (settings.py:132-140, SURVEY.md X2).
+* ``cell_edge_slots`` — per boundary cell, the few edges that can affect a
+  point in it: the data behind pip_join's JVM-side exact refine.
 
 Geometry conventions (matching the reference's planar lon/lat model):
 all polygon math is planar over (lon, lat) degrees. Rings that cross the
@@ -59,53 +61,6 @@ def _crossings(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
             x1[None, :] - x0[None, :]
         )
     return np.sum(cond & (px < xint), axis=1)
-
-
-def pip_column(
-    rings_by_region: dict[int, list[np.ndarray]],
-    region_col,
-    lon_col,
-    lat_col,
-):
-    """Pure-Column even-odd PIP — the JVM twin of points_in_rings, bit-exact.
-
-    Emits a region_id when-chain whose branches unroll each region's edges
-    as double arithmetic IDENTICAL to _crossings (same epsilon'd
-    denominator precomputed in numpy, same op order — IEEE doubles match
-    across numpy and the JVM), so results are bit-exact with the pandas-UDF
-    path (golden-verified). Motivation: Spark extracts pandas UDFs into an
-    ArrowEvalPython operator BELOW the containing filter, so a fused
-    `interior-OR-udf(...)` predicate ships every candidate row through
-    Arrow; a Column predicate avoids Python entirely. MEASURED LIMIT
-    (BENCH/PLANS.md r3): at ~134 total edges the when-chain leaves
-    whole-stage codegen and ran ~9x slower than the Arrow UDF on the
-    500M-row headline — use only for tiny covers (a bbox rectangle, a
-    small convex fence); pip_join gates it behind refine='column' /
-    max_column_edges.
-    """
-    from pyspark.sql import functions as F
-
-    expr = F.lit(False)
-    for rid, rings in rings_by_region.items():
-        cnt = None
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            if r.shape[0] < 3:
-                continue
-            x0, y0 = r[:, 0], r[:, 1]
-            x1, y1 = np.roll(x0, -1), np.roll(y0, -1)
-            d = y1 - y0 + 1e-300  # precomputed in numpy = bit-identical eps
-            dx = x1 - x0
-            for i in range(r.shape[0]):
-                cond = (F.lit(float(y0[i])) > lat_col) != (F.lit(float(y1[i])) > lat_col)
-                xint = F.lit(float(x0[i])) + (lat_col - F.lit(float(y0[i]))) / F.lit(
-                    float(d[i])
-                ) * F.lit(float(dx[i]))
-                c = F.when(cond & (lon_col < xint), 1).otherwise(0)
-                cnt = c if cnt is None else cnt + c
-        inside = (cnt % 2) == 1 if cnt is not None else F.lit(False)
-        expr = F.when(region_col == int(rid), inside).otherwise(expr)
-    return expr
 
 
 def points_in_rings(px: np.ndarray, py: np.ndarray, rings: list[np.ndarray]) -> np.ndarray:
@@ -294,6 +249,57 @@ def polygon_cover(
     keep = boundary | center_in
     cells = C.xy_to_cell(gx[keep], gy[keep], res)
     return cells, boundary[keep]
+
+
+# Far above the rounding in cell assignment (~1e-13 deg), far below a cell.
+EDGE_MARGIN_DEG = 1e-9
+# Bounds the (cells x edges) keep-mask of cell_edge_slots to ~4M entries.
+_SLOT_CHUNK = 1 << 22
+
+
+def cell_edge_slots(rings: list[np.ndarray], cells: np.ndarray) -> list[np.ndarray]:
+    """Per cover cell, the only ring edges that can add a crossing for a
+    point assigned to that cell — the per-cell data that lets pip_join run
+    the exact refine as a JVM expression (GeoBlocks: precompute per cell, be
+    exact only at the border).
+
+    Returns one flat float64 array ``[x0, y0, y1, d, dx]*`` per cell with
+    ``d = y1 - y0 + 1e-300`` and ``dx = x1 - x0`` precomputed exactly as
+    _crossings computes them, so ``x0 + (py - y0) / d * dx`` evaluated in
+    the JVM is bit-identical to points_in_rings. An edge is kept when its
+    y-range overlaps the cell's y-band and its max x reaches the cell's left
+    x, both widened by EDGE_MARGIN_DEG; every other edge adds exactly 0 to
+    _crossings for any point inside the cell. Cells on the world border keep
+    every edge: cell assignment clamps out-of-range, NaN and +/-inf
+    coordinates into them.
+    """
+    rings = [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 3]
+    cells = np.asarray(cells, dtype=np.int64)
+    if not rings or cells.size == 0:
+        return [np.empty(0) for _ in range(cells.size)]
+    x0 = np.concatenate([r[:, 0] for r in rings])
+    y0 = np.concatenate([r[:, 1] for r in rings])
+    x1 = np.concatenate([np.roll(r[:, 0], -1) for r in rings])
+    y1 = np.concatenate([np.roll(r[:, 1], -1) for r in rings])
+    rec = np.stack([x0, y0, y1, y1 - y0 + 1e-300, x1 - x0], axis=1)
+    y_lo = np.minimum(y0, y1) - EDGE_MARGIN_DEG
+    y_hi = np.maximum(y0, y1) + EDGE_MARGIN_DEG
+    x_hi = np.maximum(x0, x1) + EDGE_MARGIN_DEG
+    lon0, lat0, _, lat1 = C.cell_bounds(cells)
+    gx, gy = C.cell_to_xy(cells)
+    top = (np.int64(1) << C.cell_res(cells)) - 1
+    border = (gx == 0) | (gx == top) | (gy == 0) | (gy == top)
+    out = []
+    step = max(1, _SLOT_CHUNK // len(rec))
+    for i in range(0, cells.size, step):
+        sl = slice(i, i + step)
+        keep = (
+            (y_lo[None, :] <= lat1[sl, None])
+            & (y_hi[None, :] >= lat0[sl, None])
+            & (x_hi[None, :] >= lon0[sl, None])
+        ) | border[sl, None]
+        out.extend(rec[k].ravel() for k in keep)
+    return out
 
 
 def adaptive_cover_res(

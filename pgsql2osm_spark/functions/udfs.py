@@ -42,8 +42,10 @@ def make_pip_udf(rings_bc):
     """Exact point-in-polygon refine against broadcast region rings.
 
     rings_bc: SparkContext.broadcast of {region_id: [np.ndarray rings]}.
-    Called only on boundary-cell candidates (the expensive stage of the
-    two-stage predicate, SURVEY.md X2) — interior-cell rows skip it.
+    spatial_join.pip_join's refine for covers whose densest boundary cell
+    needs more than MAX_EDGE_SLOTS edges; smaller covers refine in the JVM.
+    Its result is consulted only for boundary-cell candidates (the
+    expensive stage of the two-stage predicate, SURVEY.md X2).
     Vectorized per region group within each Arrow batch.
     """
 

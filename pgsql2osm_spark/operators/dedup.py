@@ -24,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from .text import fingerprint_col
 
@@ -463,11 +462,3 @@ def phash_near_dups(
         ph, "phash", "image_id", max_hamming, max_bucket=max_bucket, log_shed=log_shed
     )
 
-
-def rank_dedup_representatives(
-    df: DataFrame, group_col: str, id_col: str = "doc_id"
-) -> DataFrame:
-    """Pick one representative per duplicate group (min id via window) —
-    mirrors the reference's first-wins done_ids semantics (SURVEY.md J9)."""
-    w = Window.partitionBy(group_col).orderBy(F.col(id_col).asc())
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")

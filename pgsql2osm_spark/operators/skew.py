@@ -38,13 +38,6 @@ def salted_repartition(df: DataFrame, cell_col: str, n_salts: int = 8, n_parts: 
     return salted.repartition(F.col(cell_col), F.col("_salt"))
 
 
-def replicate_dim_for_salt(dim: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Replicate the dimension side across all salt values so a salted
-    equi-join on (key, _salt) stays correct."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
-    return dim.select("*", salts)
-
-
 def measure_cell_counts(df: DataFrame, cell_col: str) -> DataFrame:
     """Cheap groupBy(cell).count() — the probe that drives adaptive decisions
     (the Spark analogue of the reference's statement_timeout='1s' probe)."""

@@ -13,15 +13,18 @@ over a GiST index) re-expressed for Spark at 10^12-point scale:
      cover resolution (<=5), unioned. No shuffle of the fact table at all:
      broadcast hash join + codegen'd cell computation stream through the scan.
   4. interior-cell matches are DONE (no exact test needed); boundary-cell
-     matches get the exact even-odd PIP via the Arrow pandas UDF. Plan
-     truth (r3, BENCH/PLANS.md): Spark extracts the UDF below the filter,
-     so ALL candidate rows pay the Arrow round-trip even though only
-     boundary rows consult the result — the two measured alternatives
-     (split-cover union: re-executes the scan per branch, 1.6-1.8x worse;
-     pure-Column unrolled refine: leaves codegen, ~9x worse at 134 edges,
-     kept as refine='column' for tiny covers) both lose, and the round-trip
-     is NOT the scaling bottleneck (the gather-shaped hash probe is). The
-     two-stage split remains the reference's "AND of ST_Intersects is
+     matches get the exact even-odd test, evaluated in the JVM inside the
+     fused join stage. build_cover precomputes, per boundary cover cell, the
+     few ring edges that can affect a point in it
+     (geometry.cell_edge_slots; GeoBlocks, EDBT 2021: precompute per cell,
+     be exact only at the border); they ride on the broadcast cover as an
+     ``_edges`` array, and one unrolled predicate (slot_refine_sql) counts
+     crossings over them with the numpy kernel's arithmetic, bit for bit.
+     Spark pushes it into the broadcast hash join's condition, so the plan
+     is one codegen stage from source to partial aggregate. Covers whose
+     densest cell needs more than MAX_EDGE_SLOTS edges fall back to the
+     Arrow pandas UDF (udfs.make_pip_udf), which costs a fixed ~0.5 s per
+     job. The two-stage split is the reference's "AND of ST_Intersects is
      1000x cheaper than ST_Intersection" staging (settings.py:132-140,
      SURVEY.md X2): >90% of candidates are interior and skip the exact
      *computation*.
@@ -47,11 +50,20 @@ from ..functions import geometry as G
 from ..functions import udfs
 from ..sources import fixtures as FX
 
+# Largest per-cell edge count the slot refine unrolls; denser covers take the
+# pandas-UDF refine. Each slot adds ~830 bytes of bytecode to the fused join
+# stage's largest method, and the JVM does not JIT-compile methods over 8000
+# bytes (HugeMethodLimit): at 9 slots the headline stage runs in the bytecode
+# interpreter. tests/test_codegen_health.py pins both limits at this value.
+MAX_EDGE_SLOTS = 8
+
 
 def build_cover(regions: list[dict], res_lo: int = 7, res_hi: int = 11, target_cells: int = 4096):
     """Driver-side cover build: returns (cover_pdf, rings_by_region).
 
-    cover_pdf columns: region_id:int64, res:int32, cell:int64, is_boundary:bool.
+    cover_pdf columns: region_id:int64, res:int32, cell:int64, is_boundary:bool,
+    _edges: the cell's edge slots (geometry.cell_edge_slots) on boundary
+    rows, None on interior rows.
     """
     recs = []
     rings_by_region: dict[int, list[np.ndarray]] = {}
@@ -62,6 +74,8 @@ def build_cover(regions: list[dict], res_lo: int = 7, res_hi: int = 11, target_c
         rings_by_region[rid] = rings
         res = G.adaptive_cover_res(rings, res_lo, res_hi, target_cells)
         cells_arr, is_bnd = G.polygon_cover(rings, res, max_cells=target_cells * 16)
+        slots = iter(G.cell_edge_slots(rings, cells_arr[is_bnd]))
+        edges = [next(slots) if b else None for b in is_bnd]
         recs.append(
             pd.DataFrame(
                 {
@@ -69,6 +83,7 @@ def build_cover(regions: list[dict], res_lo: int = 7, res_hi: int = 11, target_c
                     "res": np.int32(res),
                     "cell": cells_arr,
                     "is_boundary": is_bnd,
+                    "_edges": edges,
                 }
             )
         )
@@ -79,6 +94,7 @@ def build_cover(regions: list[dict], res_lo: int = 7, res_hi: int = 11, target_c
                 "res": pd.Series(dtype="int32"),
                 "cell": pd.Series(dtype="int64"),
                 "is_boundary": pd.Series(dtype="bool"),
+                "_edges": pd.Series(dtype="object"),
             }
         )
         return cover, rings_by_region
@@ -98,21 +114,16 @@ def pip_join(
     keep_cols: list[str] | None = None,
     cell_cols: dict[int, str] | None = None,
     max_broadcast_cells: int = 2_000_000,
-    refine: str = "udf",
-    max_column_edges: int = 64,
     coarse_prefilter: bool = False,
     max_prefilter_cells: int = 512,
 ) -> DataFrame:
     """points x regions -> rows of points inside each region.
 
-    ``refine``: 'udf' (default) refines boundary rows with the Arrow
-    pandas-UDF exact test; 'column' unrolls the even-odd test as a pure
-    Column expression, 'auto' picks 'column' only up to ``max_column_edges``
-    TOTAL edges. MEASURED: at ~130 edges x 12 regions the unrolled
-    expression ran ~9x slower than the Arrow UDF on the 500M-row headline
-    (the giant when-chain leaves whole-stage codegen), so 'udf' stays the
-    default; 'column' only ever pays off for tiny covers (bbox rectangles,
-    a handful of edges).
+    Exact refine: boundary-cell candidates are tested against their cell's
+    edge slots by a JVM expression in the join condition (bit-identical to
+    geometry.points_in_rings); a cover whose densest boundary cell needs
+    more than MAX_EDGE_SLOTS edges uses the Arrow pandas-UDF test instead.
+    There is no knob: the cover decides.
 
     Returns the point columns (or ``keep_cols``) + ``region_id``. A point in
     k overlapping regions yields k rows (nested admin levels do overlap, as
@@ -179,7 +190,17 @@ def pip_join(
     # generation): a branch-per-stage union re-executes it per branch
     # (measured 1.6-1.8x total wall on the 500M-row headline).
     res_list = [int(r) for r in sorted(cover_pdf["res"].unique())]
-    cov = spark.createDataFrame(cover_pdf[["cell", "region_id", "is_boundary"]])
+    # The one refine dispatch rule: the exact test runs as a JVM expression
+    # over per-cell edge slots when the densest boundary cell needs at most
+    # MAX_EDGE_SLOTS edges, else as the Arrow pandas UDF.
+    n_slots = max((len(e) // 5 for e in cover_pdf["_edges"] if e is not None), default=0)
+    use_slots = n_slots <= MAX_EDGE_SLOTS
+    if use_slots:
+        cov = spark.createDataFrame(
+            cover_pdf[["cell", "region_id", "is_boundary", "_edges"]], COVER_SLOTS_SCHEMA
+        )
+    else:
+        cov = spark.createDataFrame(cover_pdf[["cell", "region_id", "is_boundary"]])
     # Materialize per-res cells as projected columns (single shared Morton
     # spread at res 26, per-res shift — cells.with_cell_columns) and explode
     # only the column references: Generate evaluates its expressions
@@ -241,24 +262,12 @@ def pip_join(
         probe = probe.withColumn("_cell", F.explode(F.array(*refs))).drop(*new_names)
     cand = probe.join(F.broadcast(cov), probe["_cell"] == cov["cell"], "inner")
     # Interior-cell rows pass without the exact test (X2 staging); boundary
-    # -cell rows take the exact refine. DEFAULT is refine='udf': the fused
-    # `interior OR pip_udf(...)` predicate. Spark extracts the Python UDF
-    # into an ArrowEvalPython stage BELOW the filter, so every candidate row
-    # pays the Arrow round-trip — but this still measured fastest: the
-    # split-cover union re-executes the source subtree per branch (1.6-1.8x
-    # total wall), and the pure-Column unrolled even-odd expression
-    # (geometry.pip_column, bit-exact) leaves whole-stage codegen and ran
-    # ~9x worse at 134 edges (BENCH/PLANS.md r3). The Column path is OPT-IN:
-    # refine='column', or 'auto' which picks it only when the cover is tiny
-    # (n_edges <= max_column_edges).
-    n_edges = sum(
-        r.shape[0] for rings in rings_by_region.values()
-        for r in rings if r.shape[0] >= 3
-    )
-    if refine == "column" or (refine == "auto" and n_edges <= max_column_edges):
-        exact = G.pip_column(
-            rings_by_region, F.col("region_id"), F.col(lon), F.col(lat)
-        )
+    # -cell rows take it. Spark pushes the slot predicate into the broadcast
+    # join's condition, inside the fused codegen stage: no Python, no extra
+    # operator. The UDF form is extracted into an ArrowEvalPython stage below
+    # the filter, so there every candidate row pays the Arrow round trip.
+    if use_slots:
+        kept = cand.where(F.expr(slot_refine_sql(n_slots, lon, lat)))
     else:
         rings_bc = spark.sparkContext.broadcast(
             {rid: [r for r in rings] for rid, rings in rings_by_region.items()}
@@ -266,10 +275,30 @@ def pip_join(
         exact = udfs.make_pip_udf(rings_bc)(
             F.col("region_id"), F.col(lon), F.col(lat)
         )
-    kept = cand.where((~F.col("is_boundary")) | exact)
+        kept = cand.where((~F.col("is_boundary")) | exact)
     return kept.select(*out_cols, "region_id")
 
 
+def slot_refine_sql(n_slots: int, lon: str, lat: str) -> str:
+    """SQL text of the two-stage accept predicate over a cover row's
+    ``_edges`` slots: interior rows pass, boundary rows take the even-odd
+    test unrolled over ``n_slots`` edges — the arithmetic of
+    geometry._crossings in the same operation order, so it is bit-identical
+    to points_in_rings. ``get`` past the end of a shorter array is NULL, and
+    ``IF(NULL, 1, 0)`` counts 0. Plain built-ins only: a higher-order
+    ``aggregate`` is CodegenFallback and would make the whole fused stage
+    interpreted."""
+    x, y = f"`{lon}`", f"`{lat}`"
+    terms = []
+    for k in range(n_slots):
+        x0, y0, y1, d, dx = (f"get(_edges, {5 * k + j})" for j in range(5))
+        terms.append(
+            f"IF((({y0} > {y}) != ({y1} > {y})) AND ({x} < {x0} + ({y} - {y0}) / {d} * {dx}), 1, 0)"
+        )
+    return f"(NOT is_boundary) OR (({' + '.join(terms) or '0'}) % 2 = 1)"
+
+
+COVER_SLOTS_SCHEMA = "cell long, region_id long, is_boundary boolean, _edges array<double>"
 REGIONS_DF_SCHEMA = "region_id long, wkb binary"
 COVER_DF_SCHEMA = "region_id long, res int, cell long, is_boundary boolean"
 

@@ -84,6 +84,54 @@ def test_polygon_cover_exactness():
             assert inside[i], "interior cell contained an outside point"
 
 
+def _slot_parity(px, py, slots):
+    """Even-odd parity over one cell's edge slots, in the operation order of
+    spatial_join.slot_refine_sql."""
+    x0, y0, y1, d, dx = slots.reshape(-1, 5).T[:, None, :]
+    px, py = px[:, None], py[:, None]
+    hit = ((y0 > py) != (y1 > py)) & (px < x0 + (py - y0) / d * dx)
+    return hit.sum(axis=1) % 2 == 1
+
+
+@settings(max_examples=25, deadline=None)
+@given(seed=st.integers(0, 10_000))
+def test_cell_edge_slots_match_all_edges(seed):
+    """For points assigned to a boundary cell (random ones and the cell's
+    corners and edge midpoints), the even-odd test over the cell's edge slots
+    equals points_in_rings over every edge, bit for bit."""
+    ring = _random_ring(seed)
+    rings = [ring, 10 + 0.3 * (ring - 10)]  # outer + hole
+    res = 9
+    cells_arr, is_bnd = G.polygon_cover(rings, res)
+    bnd = cells_arr[is_bnd]
+    slots = G.cell_edge_slots(rings, bnd)
+    r = np.random.default_rng(seed)
+    lon0, lat0, lon1, lat1 = C.cell_bounds(bnd)
+    for i, cell in enumerate(bnd):
+        fx = np.concatenate([r.uniform(0, 1, 40), [0, 0.5, 0, 0.5, 0.999999]])
+        fy = np.concatenate([r.uniform(0, 1, 40), [0, 0, 0.5, 0.5, 0.999999]])
+        px = lon0[i] + fx * (lon1[i] - lon0[i])
+        py = lat0[i] + fy * (lat1[i] - lat0[i])
+        mine = C.cell_encode(px, py, res) == cell
+        px, py = px[mine], py[mine]
+        assert (_slot_parity(px, py, slots[i]) == G.points_in_rings(px, py, rings)).all()
+        assert len(slots[i]) % 5 == 0 and 0 < len(slots[i]) // 5 <= 2 * len(ring)
+
+
+def test_cell_edge_slots_keep_every_edge_on_the_world_border():
+    """Cells in the first/last grid row or column keep all edges (cell
+    assignment clamps out-of-range and non-finite points into them); other
+    cells keep only the edges in their y-band that reach their left x."""
+    ring = np.array([[-180.0, 10.0], [-150.0, 10.0], [-150.0, 40.0], [-180.0, 40.0]])
+    res = 4
+    cells_arr, is_bnd = G.polygon_cover([ring], res)
+    x, _ = C.cell_to_xy(cells_arr)
+    slots = G.cell_edge_slots([ring], cells_arr[is_bnd])
+    counts = np.array([len(s) // 5 for s in slots])
+    assert (counts[x[is_bnd] == 0] == 4).all()
+    assert (counts[x[is_bnd] > 0] < 4).all()
+
+
 def test_haversine_known_values():
     assert abs(G.haversine_m(0, 0, 0, 1) - 111_195) < 300  # 1 deg lat
     assert G.haversine_m(0, 0, 0, 0) == 0

@@ -204,3 +204,23 @@ def test_jpeg_fill_bytes_before_marker():
     sof = data.index(b"\xff\xc0")
     padded = data[:sof] + b"\xff\xff\xff" + data[sof:]
     assert (J.jpeg_decode(padded) == ref).all()
+
+
+def test_jpeg_truncated_marker_raises_value_error():
+    """Input cut off inside the marker walk raises the codec's ValueError:
+    trailing 0xFF fill bytes with no marker code after them (an IndexError
+    before), and a segment whose 2-byte length field is cut short (a
+    struct.error before)."""
+    import pytest
+
+    from pgsql2osm_spark.functions import jpeg as J
+
+    px = rng.integers(0, 256, (16, 16, 3)).astype(np.uint8)
+    data = J.jpeg_encode(px, quality=92)
+    sof = data.index(b"\xff\xc0")
+    for cut in (b"\xff\xd8\xff", b"\xff\xd8\xff\xff\xff", data[:sof] + b"\xff\xff"):
+        with pytest.raises(ValueError, match="truncated"):
+            J.jpeg_decode(cut)
+    for cut in (data[: sof + 2], data[: sof + 3]):
+        with pytest.raises(ValueError, match="truncated"):
+            J.jpeg_decode(cut)

@@ -9,10 +9,11 @@ from pgsql2osm_spark.sources import fixtures as FX
 
 
 def oracle_assignments(lon, lat, regions):
-    """Brute-force even-odd PIP for every (point, region) pair."""
+    """Brute-force even-odd PIP for every (point, region) pair, over the
+    rings as the engine reads them (antimeridian crossings split)."""
     out = set()
     for reg in regions:
-        rings = FX.region_rings(reg)
+        rings = G.normalize_rings(FX.region_rings(reg))
         inside = G.points_in_rings(lon, lat, rings)
         for i in np.nonzero(inside)[0]:
             out.add((int(i), int(reg["region_id"])))
@@ -199,22 +200,62 @@ def test_partitioned_refine_salted_groups(spark):
     assert n_groups >= 4, f"salt fan-out too low: {n_groups}"
 
 
-def test_pip_column_refine_bit_parity(spark):
-    """refine='column' (pure-Column unrolled even-odd, zero Python) is
-    bit-exact with the Arrow-UDF refine and the brute-force oracle — kept
-    for tiny covers only (measured 9x slower at fixture edge counts,
-    BENCH/PLANS.md r3)."""
-    n = 3000
-    lon, lat = FX.gen_points_slice(0, n)
-    regions = FX.gen_admin_polygons(6)
-    pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n), "lon": lon, "lat": lat}))
-    a = {(int(r["idx"]), int(r["region_id"])) for r in
-         SJ.pip_join(spark, pts, regions, keep_cols=["idx"], refine="udf").collect()}
-    col_df = SJ.pip_join(spark, pts, regions, keep_cols=["idx"], refine="column")
-    b = {(int(r["idx"]), int(r["region_id"])) for r in col_df.collect()}
-    assert a == b == oracle_assignments(lon, lat, regions)
-    plan = col_df._jdf.queryExecution().executedPlan().toString()
+def _edge_case_regions_and_points():
+    """Regions and points for the refine parity test: a square with a square
+    hole, a rectangle written across the antimeridian, a cap touching the
+    north pole; points on every vertex, on the middle of every edge
+    (horizontal and vertical ones included), on lon = +/-180 and
+    lat = +/-90, and NaN / +/-inf coordinates."""
+    def rect(x0, y0, x1, y1):
+        return [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
+
+    regions = [
+        {"region_id": 101, "outer_rings": [rect(10.3, 20.7, 12.1, 22.5)],
+         "inner_rings": [rect(10.9, 21.1, 11.5, 21.9)]},
+        {"region_id": 102, "outer_rings": [rect(170.0, 10.0, -170.0, 20.0)],
+         "inner_rings": []},
+        {"region_id": 103, "outer_rings": [rect(-30.0, 80.0, 30.0, 90.0)],
+         "inner_rings": []},
+    ]
+    pts = []
+    for reg in FX.gen_admin_polygons(6) + regions:
+        for ring in G.normalize_rings(FX.region_rings(reg)):
+            nxt = np.roll(ring, -1, axis=0)
+            pts += ring.tolist() + ((ring + nxt) / 2.0).tolist()
+    nan, inf = float("nan"), float("inf")
+    for y in (15.0, 85.0, nan, inf, -inf, 90.0, -90.0):
+        for x in (180.0, -180.0, 175.0, -175.0, 0.0, nan, inf, -inf):
+            pts.append([x, y])
+    pts = np.asarray(pts, dtype=np.float64)
+    return regions, pts[:, 0], pts[:, 1]
+
+
+def test_slot_refine_bit_parity(spark, monkeypatch):
+    """The JVM slot refine, the pandas-UDF fallback (forced with
+    MAX_EDGE_SLOTS = 0) and the brute-force oracle give the same
+    assignments — on fixture points and on the exact-boundary and
+    degenerate coordinates of _edge_case_regions_and_points."""
+    extra, ex_lon, ex_lat = _edge_case_regions_and_points()
+    lon, lat = FX.gen_points_slice(0, 3000)
+    lon, lat = np.concatenate([lon, ex_lon]), np.concatenate([lat, ex_lat])
+    regions = FX.gen_admin_polygons(6) + extra
+    pts = spark.createDataFrame(pd.DataFrame({"idx": np.arange(len(lon)), "lon": lon, "lat": lat}))
+
+    def run():
+        df = SJ.pip_join(spark, pts, regions, keep_cols=["idx"])
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return {(int(r["idx"]), int(r["region_id"])) for r in df.collect()}, plan
+
+    slots, plan = run()
     assert "ArrowEvalPython" not in plan  # truly Python-free
+    monkeypatch.setattr(SJ, "MAX_EDGE_SLOTS", 0)
+    udf, udf_plan = run()
+    assert "ArrowEvalPython" in udf_plan
+    exp = oracle_assignments(lon, lat, regions)
+    assert slots == udf == exp, (
+        f"slots^oracle={sorted(slots ^ exp)[:5]} udf^oracle={sorted(udf ^ exp)[:5]}"
+    )
+    assert {101, 102, 103} <= {rid for _, rid in exp}
 
 
 def test_pip_join_coarse_prefilter_identical(spark):
